@@ -3,8 +3,9 @@ transforms/Features.java:55-130 + utils/PredictionUtils.java:35-57;
 SURVEY.md §2 J2/J3/F6/F7/A6/A7/R2).
 
 Pipeline: DeviceProfiles
-  -> broadcast LEFT-ANTI join against the suspicious blacklist (J2; the
-     reference compares DeviceId protos exactly — os + uuid, case as given)
+  -> LEFT-ANTI join against the suspicious blacklist, broadcast by
+     Catalyst (J2; the reference compares DeviceId protos exactly — os +
+     uuid, case as given)
   -> deterministic 1/16 sample: canonical uuid char at index 7 == '0'
      (F6; Features.java:116)
   -> per-device intersection with the in-app-purchase dimension via
@@ -38,10 +39,8 @@ def feature_inputs(
       f586 = intersect_purchaser / (1 + total_purchasers)
       f777 = intersect_amount / (1 + total_amount)
     """
-    from .skew import routed_anti_join
-
     kept = (
-        routed_anti_join(profiles, suspicious, ["os", "uuid"])
+        profiles.join(suspicious.select("os", "uuid"), ["os", "uuid"], "left_anti")
         .filter(F.substring(F.col("uuid"), 8, 1) == "0")
         .select("os", "uuid", "first_at", F.size("apps").alias("app_count"), "apps")
     )
@@ -128,12 +127,10 @@ def feature_pipeline_from_valid(
         .filter(F.col("user_count") > t.user_count)
         .select("bundle")
     )
-    # J1 capacity routing (SURVEY §4 ladder): device_apps is HELD, so the
-    # router's probe is a cache read. Board fixtures → rung 1 (broadcast).
-    from .skew import routed_anti_join
-
+    # J1: a plain anti join; Catalyst and AQE pick the join strategy
+    # (broadcast on every fixture; see SURVEY.md §4 for the scale fallback)
     unpopular_counts = (
-        routed_anti_join(device_apps, popular, "bundle")
+        device_apps.join(popular, "bundle", "left_anti")
         .groupBy("os", "uuid")
         .agg(F.count(F.lit(1)).alias("unpopular_apps"))
     )
@@ -196,16 +193,15 @@ def feature_inputs_from_valid(
     validated rows (same output, oracle-checked): per-device first_at and
     app_count come from one codegen hash agg, the IAPP intersection from
     the distinct device-app pairs — no nested arrays anywhere."""
-    from .skew import routed_anti_join
-
-    dev = routed_anti_join(
-        valid_logs.groupBy("os", "uuid").agg(
+    dev = (
+        valid_logs.groupBy("os", "uuid")
+        .agg(
             F.min("received_at").alias("first_at"),
             F.countDistinct("app_bundle").cast("int").alias("app_count"),
-        ),
-        suspicious,
-        ["os", "uuid"],
-    ).filter(F.substring(F.col("uuid"), 8, 1) == "0")
+        )
+        .join(suspicious.select("os", "uuid"), ["os", "uuid"], "left_anti")
+        .filter(F.substring(F.col("uuid"), 8, 1) == "0")
+    )
     device_apps = (
         valid_logs.select("os", "uuid", F.col("app_bundle").alias("bundle"))
         .distinct()

@@ -10,10 +10,10 @@ id is emitted at most once — here a single boolean disjunction per row):
   (c) its total bid count across all apps/exchanges exceeds
       BID_LOG_COUNT_THRESHOLD
 
-The popular-apps side input (Beam View.asList) becomes a broadcast
-left-anti join — the dimension is small (distinct bundles), so no shuffle
-of the device side; at 100 TB the detail side streams through
-map-side-only stages.
+The popular-apps side input (Beam View.asList) becomes a plain left-anti
+join that Catalyst broadcasts from its size estimate — the dimension is
+small (distinct bundles), so no shuffle of the device side; at 100 TB the
+detail side streams through map-side-only stages.
 """
 
 from __future__ import annotations
@@ -51,10 +51,8 @@ def suspicious_ids(
     device_apps = profiles.select(
         "os", "uuid", F.explode(F.col("apps.bundle")).alias("bundle")
     )
-    from .skew import routed_anti_join
-
     unpopular_counts = (
-        routed_anti_join(device_apps, popular, "bundle")
+        device_apps.join(popular, "bundle", "left_anti")
         .groupBy("os", "uuid")
         .agg(F.count(F.lit(1)).alias("unpopular_apps"))
     )
@@ -120,14 +118,11 @@ def suspicious_ids_from_valid(
         .filter(F.col("user_count") > t.user_count)
         .select("bundle")
     )
-    # J1 capacity routing: popular derives from the HELD level1, so the
-    # router's broadcast-rung probe (one count of the key projection) is a
-    # cache read, not a recompute. On every board fixture the popular set is
-    # thousands of keys → rung 1 (broadcast), the plan this query always had.
-    from .skew import routed_anti_join
-
+    # J1: a plain anti join. Catalyst broadcasts the popular set from its
+    # size estimate and AQE re-plans from runtime stats; the scale fallback
+    # for a popular set too big to broadcast is SURVEY.md §4.
     unpopular_counts = (
-        routed_anti_join(level1, popular, "bundle")
+        level1.join(popular, "bundle", "left_anti")
         .groupBy("os", "uuid")
         .agg(F.count(F.lit(1)).alias("unpopular_apps"))
     )

@@ -342,8 +342,9 @@ class _Reader:
         ln = self.read_varint(mask).view(np.int64)
         ok = mask & ~self.bad
         start = self.pos.copy()
-        # ln < 0 = a length >= 2^63 (int64 view): always exceeds any limit
-        over = ok & ((ln < 0) | (self.pos + ln > limit))
+        # ln < 0 = a length >= 2^63 (int64 view): always exceeds any limit.
+        # Compare against the room left: pos + ln can wrap past 2^63.
+        over = ok & ((ln < 0) | (ln > limit - self.pos))
         self.bad |= over
         adv = ok & ~over
         self.pos[adv] += ln[adv]

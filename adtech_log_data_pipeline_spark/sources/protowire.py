@@ -15,7 +15,7 @@ Two paths, same semantics:
   * preferred (when the optional spark-protobuf jar + a compiled descriptor
     set ARE available): `pyspark.sql.protobuf.functions.from_protobuf` /
     `to_protobuf` — JVM-side, vectorized; see `have_spark_protobuf()` and
-    `read_b64_proto_jvm()`.
+    `decode_b64_proto_jvm()`.
   * fallback (always works): a pure-Python wire codec run through
     Arrow-batched `mapInPandas`. This is a sanctioned boundary codec —
     the blobs enter/leave the engine exactly once, the hot path stays
@@ -550,20 +550,6 @@ def row_to_bidlog(row: dict[str, Any]) -> dict[str, Any]:
 # Spark integration (Arrow-batched boundary codec)
 
 
-def read_b64_proto(
-    spark: SparkSession,
-    path: str,
-    spec: Spec,
-    out_schema: str,
-    to_row: Callable[[dict[str, Any]], dict[str, Any]],
-    drop_default_instance: bool = True,
-) -> DataFrame:
-    """Text source of Base64(proto-wire) lines -> typed DataFrame, dropping
-    malformed rows (S2+S3 with real proto payloads)."""
-    raw = spark.read.text(path)
-    return decode_b64_proto(raw, spec, out_schema, to_row, drop_default_instance)
-
-
 def decode_b64_proto(
     df: DataFrame,
     spec: Spec,
@@ -654,21 +640,6 @@ def encode_wire_proto(
             yield pd.DataFrame({"payload": vals})
 
     return df.mapInPandas(batches, schema="payload binary")
-
-
-def write_b64_proto(
-    df: DataFrame,
-    path: str,
-    spec: Spec,
-    from_row: Callable[[dict[str, Any]], dict[str, Any]],
-    single_file: bool = False,
-) -> None:
-    """Base64 proto text sink (S4). `single_file` mirrors withNumShards(1)
-    locally; never at scale."""
-    out = encode_b64_proto(df, spec, from_row)
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").text(path)
 
 
 # ---------------------------------------------------------------------------

@@ -324,3 +324,38 @@ def test_index_compact_and_vacuum_cli(spark, tmp_path):
         main(["--job", "index-vacuum", "--against", idx, "--output", idx])
         in (0, None)
     )
+
+
+def test_bidlog_job_reruns_over_the_same_tfrecord_files(spark, logs, tmp_path):
+    """Running BidLogJob twice over the same TFRecord files in one session
+    must succeed both times with equal validation counters: nothing built
+    by the first run (its Observation included) may leak into the second
+    run's plan."""
+    from adtech_log_data_pipeline_spark.sources.protowire import (
+        BID_LOG,
+        BID_LOG_SQL_SCHEMA,
+        bidlog_to_row,
+        encode_message,
+        row_to_bidlog,
+    )
+    from adtech_log_data_pipeline_spark.sources.tfrecord import (
+        read_tfrecord_proto,
+        write_tfrecord,
+    )
+
+    payloads = [
+        encode_message(row_to_bidlog(r.asDict()), BID_LOG) for r in logs.collect()
+    ]
+    write_tfrecord(str(tmp_path / "bidlog-0.tfrecord.gz"), payloads[:8])
+    write_tfrecord(str(tmp_path / "bidlog-1.tfrecord.gz"), payloads[8:])
+    glob = str(tmp_path / "bidlog-*.tfrecord.gz")
+
+    runs = []
+    for attempt in ("first", "rerun"):
+        tf_logs = read_tfrecord_proto(
+            spark, glob, BID_LOG, BID_LOG_SQL_SCHEMA, bidlog_to_row
+        )
+        res = run_bidlog_job(spark, tf_logs, output_dir=str(tmp_path / attempt))
+        assert res.suspicious.count() == 1
+        runs.append(res.metrics)
+    assert runs[0] == runs[1] == {"n_input": 22, "n_valid": 21, "n_dropped": 1}

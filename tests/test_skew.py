@@ -177,14 +177,14 @@ def _zipf_valid_bid_logs(spark, n=120_000, n_bundles=1_000, n_devices=30_000):
 
 
 def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
-    """The REAL A5 skew surface: suspicious_ids' popularity lookup is a
-    bundle-keyed anti-join (operators/suspicious.py:119-125). The engine
-    broadcasts the popular set — skew-immune — but at web scale a popular
-    set beyond broadcast capacity degrades to a shuffle join keyed by
-    bundle, and a zipf-hot bundle then skews one partition >10x. This
-    pins the RUNTIME safety net for exactly that regime and records two
-    empirical constraints (this Spark build, measured here) that the
-    SURVEY §8 scale notes state:
+    """The REAL A5 skew surface: the J1 popularity lookup in
+    suspicious_ids_from_valid is a plain bundle-keyed LEFT ANTI join.
+    Catalyst broadcasts the popular set on every fixture (skew-immune),
+    but at web scale a popular set beyond broadcast capacity plans as a
+    shuffle join keyed by bundle, and a zipf-hot bundle then skews one
+    partition >10x. This test is the pinned recipe for that regime and
+    records two empirical constraints (this Spark build, measured here)
+    that the SURVEY §8 scale notes state:
 
       * AQE's OptimizeSkewedJoin does NOT split LEFT ANTI / LEFT SEMI
         joins — the equivalent LEFT OUTER + is-popular-null filter (row-
@@ -196,20 +196,20 @@ def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
         set PRECOMPUTED and read back from storage (modeled with
         localCheckpoint) — is exactly the shape AQE can split.
 
-    When manual salting (operators/skew.py) still beats AQE: AQE splits
-    AFTER the map stage wrote the skewed shuffle files (reducer-side fix
-    only), inside one join only, and not for anti/semi shapes it cannot
-    rewrite; a deliberate salt spreads the hot key at map time and
-    composes across stages. The engine's first defense remains that the
-    level-1 aggregation key (os, uuid, bundle) is high-cardinality and
-    hash-uniform even under bundle zipf — only the bundle-keyed JOIN
-    ever skews, and only when the dim side cannot broadcast."""
+    When a manual salt (operators/skew.py::salted_join) still beats AQE:
+    AQE splits AFTER the map stage wrote the skewed shuffle files
+    (reducer-side fix only) and inside one join only; a deliberate salt
+    spreads the hot key at map time and composes across stages. The
+    engine's first defense remains that the level-1 aggregation key
+    (os, uuid, bundle) is high-cardinality and hash-uniform even under
+    bundle zipf — only the bundle-keyed JOIN ever skews, and only when
+    the lookup side cannot broadcast."""
     from pyspark.sql import functions as F
 
     from adtech_log_data_pipeline_spark.operators.validate import valid_bid_logs
 
     v = valid_bid_logs(_zipf_valid_bid_logs(spark, n=400_000, n_devices=100_000))
-    # the operator's level-0/level-1 reduction (suspicious.py:101-112),
+    # suspicious_ids_from_valid's level-0/level-1 reduction,
     # sans hold(): device-app relation with one row per (os, uuid, bundle)
     level1 = (
         v.groupBy("os", "uuid", F.col("app_bundle").alias("bundle"))
@@ -274,241 +274,19 @@ def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
                 conf.set(k, v2)
 
 
-def test_salted_anti_semi_join_equals_plain_on_zipf(spark):
-    """Law: salted_anti_join == plain anti/semi join, row-multiset equal,
-    on the A5 zipf fixture (hot bundle key); and the salted shuffle key
-    (bundle, salt) measurably SPLITS the hot partition the plain
-    bundle-keyed shuffle funnels into one reducer (numbers recorded in
-    SURVEY §8)."""
-    from pyspark.sql import functions as F
-
-    from adtech_log_data_pipeline_spark.operators.skew import salted_anti_join
-    from adtech_log_data_pipeline_spark.operators.validate import valid_bid_logs
-
-    v = valid_bid_logs(_zipf_valid_bid_logs(spark, n=120_000, n_devices=30_000))
-    level1 = v.groupBy("os", "uuid", F.col("app_bundle").alias("bundle")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    popular = (
-        level1.groupBy("bundle")
-        .agg(F.count(F.lit(1)).alias("user_count"))
-        .filter(F.col("user_count") > 300)
-        .select("bundle")
-    )
-
-    def key_multiset(df):
-        rows = df.select("os", "uuid", "bundle", "n").collect()
-        return sorted(map(tuple, rows))
-
-    for how in ("left_anti", "left_semi"):
-        plain = level1.join(popular, "bundle", how)
-        salted = salted_anti_join(level1, popular, "bundle", n_salts=8, how=how)
-        assert key_multiset(salted) == key_multiset(plain), how
-    assert salted_anti_join(level1, popular, "bundle", how="left_anti").count() > 0
-
-    # measured split: rows per shuffle partition keyed the plain way vs
-    # the salted way — the hot bundle's mass must spread by ~n_salts
-    n_parts = 32
-    plain_sizes = sorted(
-        (
-            r["count"]
-            for r in v.groupBy(
-                F.pmod(F.hash("app_bundle"), F.lit(n_parts)).alias("p")
-            )
-            .count()
-            .collect()
-        ),
-        reverse=True,
-    )
-    salt = F.pmod(F.hash(*[F.col(c) for c in v.columns]), F.lit(16))
-    salted_sizes = sorted(
-        (
-            r["count"]
-            for r in v.groupBy(
-                F.pmod(F.hash("app_bundle", salt), F.lit(n_parts)).alias("p")
-            )
-            .count()
-            .collect()
-        ),
-        reverse=True,
-    )
-    assert salted_sizes[0] * 3 < plain_sizes[0], (
-        plain_sizes[:3],
-        salted_sizes[:3],
-    )
-
-
-def test_salted_anti_join_rejects_other_hows(spark):
-    import pytest
-
-    from adtech_log_data_pipeline_spark.operators.skew import salted_anti_join
-
-    df = spark.range(2).selectExpr("id as k")
-    with pytest.raises(ValueError):
-        salted_anti_join(df, df, "k", how="inner")
-
-
-def test_routed_anti_join_rungs_and_equivalence(spark):
-    """routed_anti_join picks the documented rung at each threshold and all
-    three rungs return the identical row multiset (SURVEY §4 ladder)."""
-    from adtech_log_data_pipeline_spark.operators.skew import (
-        AntiJoinRouting,
-        routed_anti_join,
-    )
-
-    facts = spark.createDataFrame(
-        # hot key 'a': 120 rows vs ~1/key tail -> max/mean >> 8
-        [("a", i) for i in range(120)]
-        + [(f"k{i}", i) for i in range(30)],
-        "k string, v int",
-    )
-    dim = spark.createDataFrame(
-        [("a",)] + [(f"k{i}",) for i in range(0, 30, 2)], "k string"
-    )
-    want = facts.join(dim, "k", "left_anti")
-
-    # rung 1: dim fits the broadcast budget
-    rep = {}
-    got = routed_anti_join(facts, dim, "k", report=rep)
-    assert rep["rung"] == "broadcast" and rep["n_keys"] == 16
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-    # rung 3: over budget + hot fact key -> salted
-    tight = AntiJoinRouting(broadcast_max_keys=4, skew_factor=8.0, n_salts=5)
-    rep = {}
-    got = routed_anti_join(facts, dim, "k", routing=tight, report=rep)
-    assert rep["rung"] == "salted" and rep["skew"] > 8.0
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-    # rung 2: over budget, fact key NOT hot -> LEFT OUTER + null filter
-    flat_facts = spark.createDataFrame(
-        [(f"k{i % 40}", i) for i in range(200)], "k string, v int"
-    )
-    flat_want = flat_facts.join(dim, "k", "left_anti")
-    rep = {}
-    got = routed_anti_join(flat_facts, dim, "k", routing=tight, report=rep)
-    assert rep["rung"] == "outer_null" and rep["skew"] < 8.0
-    assert (
-        got.exceptAll(flat_want).count() == 0
-        and flat_want.exceptAll(got).count() == 0
-    )
-    assert got.columns == flat_facts.columns  # _hit marker dropped
-
-
-def test_routed_anti_join_semi_and_composite_key(spark):
-    """left_semi routing + composite (os, uuid) key — the J2 blacklist
-    shape — on every rung; dim duplicates must not duplicate left rows."""
-    from adtech_log_data_pipeline_spark.operators.skew import (
-        AntiJoinRouting,
-        routed_anti_join,
-    )
-
-    facts = spark.createDataFrame(
-        [("ios", f"u{i % 9}", i) for i in range(90)]
-        + [("android", "hot", i) for i in range(200)],
-        "os string, uuid string, v int",
-    )
-    dim = spark.createDataFrame(
-        # duplicate blacklist rows on purpose
-        [("android", "hot"), ("android", "hot"), ("ios", "u3")],
-        "os string, uuid string",
-    )
-    for how in ("left_anti", "left_semi"):
-        want = facts.join(dim.distinct(), ["os", "uuid"], how)
-        for routing in (
-            AntiJoinRouting(),  # broadcast
-            AntiJoinRouting(broadcast_max_keys=1, skew_factor=2.0),  # salted
-            AntiJoinRouting(broadcast_max_keys=1, skew_factor=1e9),  # outer_null
-        ):
-            rep = {}
-            got = routed_anti_join(
-                facts, dim, ["os", "uuid"], how=how, routing=routing, report=rep
-            )
-            assert got.exceptAll(want).count() == 0, (how, rep)
-            assert want.exceptAll(got).count() == 0, (how, rep)
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        routed_anti_join(facts, dim, ["os", "uuid"], how="inner")
-
-
-def test_routed_anti_join_probe_memo(spark):
-    """Within a session the key-count probe runs once per distinct lookup
-    plan: the second routed_anti_join over a semantically identical dim
-    reports probe == "memo" and returns identical rows; a different dim
-    plan re-probes fresh."""
-    from adtech_log_data_pipeline_spark.operators.skew import (
-        probe_memo_clear,
-        routed_anti_join,
-    )
-
-    probe_memo_clear()
-    facts = spark.createDataFrame(
-        [(f"k{i % 20}", i) for i in range(100)], "k string, v int"
-    )
-    dim = spark.createDataFrame([(f"k{i}",) for i in range(0, 20, 3)], "k string")
-    want = facts.join(dim, "k", "left_anti")
-
-    rep1, rep2, rep3 = {}, {}, {}
-    a = routed_anti_join(facts, dim, "k", report=rep1)
-    b = routed_anti_join(facts, dim, "k", report=rep2)
-    assert rep1["probe"] == "fresh" and rep2["probe"] == "memo"
-    assert rep1["n_keys"] == rep2["n_keys"]
-    for got in (a, b):
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-
-    other = spark.createDataFrame([("k1",), ("k2",)], "k string")
-    routed_anti_join(facts, other, "k", report=rep3)
-    assert rep3["probe"] == "fresh" and rep3["n_keys"] == 2
-
-    # memo survives the inter-query cache release (frame unpersisted but
-    # the count is still valid for the immutable fixture)
-    from adtech_log_data_pipeline_spark.functions._cache import release_cached
-
-    release_cached()
-    rep4 = {}
-    c = routed_anti_join(facts, dim, "k", report=rep4)
-    assert rep4["probe"] == "memo"
-    assert c.exceptAll(want).count() == 0 and want.exceptAll(c).count() == 0
-    probe_memo_clear()
-
-
 def test_helper_columns_never_clobber_user_columns(spark):
-    """Facts that already carry _hit/_salt columns pass through every
-    rung and every salted operator unscathed (the helper names are
-    generated collision-free)."""
+    """Facts that already carry a _salt column pass through every salted
+    operator unscathed (the helper names are generated collision-free)."""
     from adtech_log_data_pipeline_spark.operators.skew import (
-        AntiJoinRouting,
-        probe_memo_clear,
-        routed_anti_join,
-        salted_anti_join,
         salted_count_distinct,
         salted_join,
     )
 
-    probe_memo_clear()
     facts = spark.createDataFrame(
-        [(f"k{i % 10}", i, 7, 9) for i in range(80)],
-        "k string, v int, _hit int, _salt int",
+        [(f"k{i % 10}", i, 9) for i in range(80)],
+        "k string, v int, _salt int",
     )
     dim = spark.createDataFrame([("k1",), ("k4",)], "k string")
-    want = facts.join(dim, "k", "left_anti")
-    for routing in (
-        AntiJoinRouting(),
-        AntiJoinRouting(broadcast_max_keys=1, skew_factor=2.0),
-        AntiJoinRouting(broadcast_max_keys=1, skew_factor=1e9),
-    ):
-        got = routed_anti_join(facts, dim, "k", routing=routing)
-        assert got.columns == facts.columns, routing
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-
-    got = salted_anti_join(facts, dim, "k")
-    assert got.columns == facts.columns
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
     jwant = facts.join(dim, "k", "inner")
     jgot = salted_join(facts, dim, "k")
     assert sorted(jgot.columns) == sorted(jwant.columns)
@@ -518,50 +296,6 @@ def test_helper_columns_never_clobber_user_columns(spark):
     cwant = facts.groupBy("k").agg(F.countDistinct("_salt", "v").alias("n"))
     cgot = salted_count_distinct(facts, ["k"], ["_salt", "v"], alias="n")
     assert cgot.exceptAll(cwant).count() == 0 and cwant.exceptAll(cgot).count() == 0
-    probe_memo_clear()
-
-
-def test_probe_memo_invalidates_on_source_rewrite(spark, tmp_path):
-    """An in-place rewrite of the lookup's source files must invalidate
-    BOTH memo tiers (the size/mtime fingerprint folded into the keys —
-    round-11 ADVICE): the re-probe is fresh, reports the NEW key count,
-    and the join reflects the rewritten key set."""
-    import os
-    import time
-
-    from adtech_log_data_pipeline_spark.operators.skew import (
-        probe_memo_clear,
-        routed_anti_join,
-    )
-
-    probe_memo_clear()
-    facts = spark.createDataFrame(
-        [(f"k{i % 20}", i) for i in range(100)], "k string, v int"
-    )
-    d = str(tmp_path / "dim.parquet")
-    spark.createDataFrame(
-        [(f"k{i}",) for i in range(4)], "k string"
-    ).coalesce(1).write.mode("overwrite").parquet(d)
-
-    rep1, rep2, rep3 = {}, {}, {}
-    a = routed_anti_join(facts, spark.read.parquet(d), "k", report=rep1)
-    n_a = a.count()
-    routed_anti_join(facts, spark.read.parquet(d), "k", report=rep2)
-    assert rep1["probe"] == "fresh" and rep1["n_keys"] == 4
-    assert rep2["probe"] == "memo"
-
-    time.sleep(0.05)  # ensure a distinct mtime_ns on coarse filesystems
-    spark.createDataFrame(
-        [(f"k{i}",) for i in range(9)], "k string"
-    ).coalesce(1).write.mode("overwrite").parquet(d)
-    # drop Spark's own file-listing cache so the new files are visible
-    spark.catalog.refreshByPath(d)
-
-    b = routed_anti_join(facts, spark.read.parquet(d), "k", report=rep3)
-    assert rep3["probe"] == "fresh", rep3
-    assert rep3["n_keys"] == 9
-    assert b.count() < n_a  # more keys removed more facts
-    probe_memo_clear()
 
 
 def test_hygienic_drops_stale_stream_tables(spark):
@@ -580,63 +314,6 @@ def test_hygienic_drops_stale_stream_tables(spark):
     QUERIES["pricing_summary"](spark, "/root/testdata/sf0.001").count()
     names = [t.name for t in spark.catalog.listTables() if t.isTemporary]
     assert "lineitem" in names  # fixture views untouched
-
-
-def test_plan_fingerprint_stable_across_lambda_constructions(spark, tmp_path):
-    """Two separately-constructed but identical lookup plans containing
-    higher-order functions (Python lambdas — pyspark binder names carry
-    a session-global counter: x_1 vs x_2) must fingerprint-equal, and a
-    literal change must still change the fingerprint (round-12 ADVICE:
-    the ExprId-only normalizer silently disabled the memo tier for
-    every transform()/filter()-bearing dim plan)."""
-    from pyspark.sql import functions as F
-
-    from adtech_log_data_pipeline_spark.operators.skew import _plan_fingerprint
-
-    d = str(tmp_path / "dim.parquet")
-    spark.createDataFrame(
-        [(i, [i, i + 1]) for i in range(4)], "k long, xs array<long>"
-    ).write.mode("overwrite").parquet(d)
-
-    def build(thresh):
-        return (
-            spark.read.parquet(d)
-            .select("k", F.transform("xs", lambda x: x + 1).alias("ys"))
-            .filter(F.size(F.filter("ys", lambda y: y > F.lit(thresh))) > 0)
-        )
-
-    f1, f2 = _plan_fingerprint(build(0)), _plan_fingerprint(build(0))
-    assert f1 and f1 == f2
-    assert _plan_fingerprint(build(5)) != f1
-
-
-def test_probe_memo_evicts_stale_source_entries(spark, tmp_path):
-    """A fresh probe after a fixture rewrite must EVICT the old-source
-    entries from both memo tiers, not leave them retaining a dead
-    DataFrame handle + stale count forever (round-12 ADVICE)."""
-    import time
-
-    from adtech_log_data_pipeline_spark.operators import skew
-    from adtech_log_data_pipeline_spark.operators.skew import (
-        probe_memo_clear,
-        routed_anti_join,
-    )
-
-    probe_memo_clear()
-    facts = spark.createDataFrame(
-        [(f"k{i % 20}", i) for i in range(60)], "k string, v int"
-    )
-    d = str(tmp_path / "dim.parquet")
-    for n in (4, 9):
-        spark.createDataFrame(
-            [(f"k{i}",) for i in range(n)], "k string"
-        ).coalesce(1).write.mode("overwrite").parquet(d)
-        spark.catalog.refreshByPath(d)
-        routed_anti_join(facts, spark.read.parquet(d), "k", report={})
-        assert len(skew._PROBE_MEMO) == 1, skew._PROBE_MEMO.keys()
-        assert len(skew._PROBE_FP_MEMO) <= 1
-        time.sleep(0.05)  # distinct mtime_ns for the rewrite
-    probe_memo_clear()
 
 
 def test_interleaved_streaming_queries_keep_results(spark):

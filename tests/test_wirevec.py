@@ -167,6 +167,8 @@ def test_decode_bidlog_rows_noncanonical_and_malformed():
         b"\x3a\x00",            # unknown field 7 LEN -> skipped by scalar
         b"\x30\x05\x10\x01",    # out-of-canonical-order fields
         b"\x0a\xff\xff\xff\xff\xff\xff\xff\xff\xff\x01",  # huge LEN
+        # bid_request { id LEN = 2^63-1 }: pos + len wraps past int64
+        b"\x0a\x0a\x0a" + b"\xff" * 8 + b"\x7f",
         bytes([0x10] + [0x80] * 9 + [0x7F]),  # 11-byte varint -> error
         bytes([0x18] + [0x80] * 9 + [0x03]),  # 10th byte > 1 (>64-bit int)
         b"\x0a\x04\x22\x00\x2a\x00",  # canonical empty app+device
