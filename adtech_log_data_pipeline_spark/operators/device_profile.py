@@ -149,6 +149,54 @@ def device_profiles(
     return app_level
 
 
+# The device rules (suspicious.py, features.py) read two narrow relations
+# that both the nested profiles and the flat validated logs produce:
+#   stats: os, uuid, first_at, app_count, geo_cnt, total_bids
+#   apps:  os, uuid, bundle — one row per device-app
+# Each rule is written once over them; Catalyst prunes whatever a caller
+# leaves unread.
+
+
+def profile_relations(profiles: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(stats, apps) read off nested DeviceProfiles; stats also passes
+    last_at through for the profile summary query."""
+    stats = profiles.select(
+        "os",
+        "uuid",
+        "first_at",
+        "last_at",
+        F.size("apps").alias("app_count"),
+        F.size("geos").alias("geo_cnt"),
+        F.expr(
+            "aggregate(apps, 0L, (acc, a) -> acc +"
+            " aggregate(map_values(a.count_per_exchange), 0L, (x, y) -> x + y))"
+        ).alias("total_bids"),
+    )
+    apps = profiles.select("os", "uuid", F.explode(F.col("apps.bundle")).alias("bundle"))
+    return stats, apps
+
+
+def valid_relations(valid_logs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(stats, apps) straight from validated logs, no nested arrays: stats
+    is one hash aggregate per device (each valid row is one bid, and geo
+    fields are never null after validation, so countDistinct is the geo
+    set size); apps is held because the popularity count, the anti join
+    and the IAPP intersection all read it."""
+    from ..functions._cache import hold
+
+    stats = valid_logs.groupBy("os", "uuid").agg(
+        F.min("received_at").alias("first_at"),
+        F.countDistinct("app_bundle").cast("int").alias("app_count"),
+        F.countDistinct("geo_country", "geo_region").alias("geo_cnt"),
+        F.count(F.lit(1)).alias("total_bids"),
+    )
+    # lazy hold: the first consumer's action fills the cache (see hold())
+    apps = hold(
+        valid_logs.select("os", "uuid", F.col("app_bundle").alias("bundle")).distinct()
+    )
+    return stats, apps
+
+
 def flatten_device_profiles(profiles: DataFrame) -> DataFrame:
     """Re-flatten nested profiles to (os, uuid, bundle, exchange, cnt,
     app_first_at, app_last_at, first_at, last_at) rows — the hashable

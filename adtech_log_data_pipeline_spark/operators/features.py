@@ -13,7 +13,9 @@ Pipeline: DeviceProfiles
      match through a LEFT join from the sampled side (coalesce 0)
   -> 4 ratio features against the global IAPP scalars (A6)
 
-Everything is native DataFrame ops; the only Python is the downstream
+The IAPP intersection, totals and ratios are written once, in `_assemble`,
+over the (stats, apps) relations of operators/device_profile.py. Everything
+is native DataFrame ops; the only Python is the downstream
 feature-vector/inference UDF (inference.py).
 """
 
@@ -22,13 +24,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .device_profile import profile_relations, valid_relations
+from .suspicious import SuspiciousThresholds, app_user_counts, score_devices
 
-def feature_inputs(
-    profiles: DataFrame,
-    suspicious: DataFrame,
-    iapp: DataFrame,
-) -> DataFrame:
-    """Per kept device: intersection aggregates + ratio features.
+
+def _in_sample():
+    """F6: deterministic 1/16 sample (Features.java:116)."""
+    return F.substring(F.col("uuid"), 8, 1) == "0"
+
+
+def _assemble(kept: DataFrame, kept_apps: DataFrame, iapp: DataFrame) -> DataFrame:
+    """Per kept device (`kept` carries os, uuid, first_at, app_count; its
+    device-app rows are `kept_apps`): intersection aggregates + ratio
+    features.
 
     Output: os, uuid, first_at, app_count, intersect_app,
     intersect_purchaser, intersect_amount, f486, f586, f686, f777.
@@ -39,17 +47,8 @@ def feature_inputs(
       f586 = intersect_purchaser / (1 + total_purchasers)
       f777 = intersect_amount / (1 + total_amount)
     """
-    kept = (
-        profiles.join(suspicious.select("os", "uuid"), ["os", "uuid"], "left_anti")
-        .filter(F.substring(F.col("uuid"), 8, 1) == "0")
-        .select("os", "uuid", "first_at", F.size("apps").alias("app_count"), "apps")
-    )
-
-    device_apps = kept.select(
-        "os", "uuid", F.explode(F.col("apps.bundle")).alias("bundle")
-    )
     matched = (
-        device_apps.join(F.broadcast(iapp), "bundle", "inner")
+        kept_apps.join(F.broadcast(iapp), "bundle", "inner")
         .groupBy("os", "uuid")
         .agg(
             F.count(F.lit(1)).alias("intersect_app"),
@@ -70,7 +69,7 @@ def feature_inputs(
     )
 
     out = (
-        kept.drop("apps")
+        kept.select("os", "uuid", "first_at", "app_count")
         .join(matched, ["os", "uuid"], "left")
         .fillna(0, ["intersect_app", "intersect_purchaser", "intersect_amount"])
         .crossJoin(F.broadcast(totals))
@@ -90,152 +89,32 @@ def feature_inputs(
     )
 
 
-def feature_pipeline_from_valid(
-    valid_logs: DataFrame,
-    iapp: DataFrame,
-    thresholds=None,
-) -> DataFrame:
-    """Fused flat-path pipeline: suspicious detection AND feature assembly
-    off ONE shared per-device aggregate — a single shuffle over the fact
-    produces (first_at, app_count, geo_cnt, total_bids) for both consumers
-    (separately, suspicious_ids_from_valid and feature_inputs_from_valid
-    each re-aggregate the fact). Output identical to
-    feature_inputs_from_valid(v, suspicious_ids_from_valid(v, t), iapp) —
-    oracle- and test-checked."""
-    from .suspicious import SuspiciousThresholds
-
-    t = thresholds or SuspiciousThresholds()
-    from ..functions._cache import hold
-
-    device_apps = hold(
-        valid_logs.select("os", "uuid", F.col("app_bundle").alias("bundle")).distinct(),
-        # lazy hold (r13): the first consumer's action fills the cache;
-        # concurrent fills are serialized per partition by the block
-        # manager, so an upfront count is pure added latency (see hold())
-    )
-
-    dev_stats = valid_logs.groupBy("os", "uuid").agg(
-        F.min("received_at").alias("first_at"),
-        F.countDistinct("app_bundle").cast("int").alias("app_count"),
-        F.countDistinct("geo_country", "geo_region").alias("geo_cnt"),
-        F.count(F.lit(1)).alias("total_bids"),
-    )
-
-    popular = (
-        device_apps.groupBy("bundle")
-        .agg(F.countDistinct("os", "uuid").alias("user_count"))
-        .filter(F.col("user_count") > t.user_count)
-        .select("bundle")
-    )
-    # J1: a plain anti join; Catalyst and AQE pick the join strategy
-    # (broadcast on every fixture; see SURVEY.md §4 for the scale fallback)
-    unpopular_counts = (
-        device_apps.join(popular, "bundle", "left_anti")
-        .groupBy("os", "uuid")
-        .agg(F.count(F.lit(1)).alias("unpopular_apps"))
-    )
-
-    kept = (
-        dev_stats.join(unpopular_counts, ["os", "uuid"], "left")
-        .withColumn("unpopular_apps", F.coalesce(F.col("unpopular_apps"), F.lit(0)))
-        .filter(
-            ~(
-                (F.col("geo_cnt") > t.geo_count)
-                | (F.col("unpopular_apps") > t.app_count)
-                | (F.col("total_bids") > t.bid_log_count)
-            )
-        )
-        .filter(F.substring(F.col("uuid"), 8, 1) == "0")
-        .select("os", "uuid", "first_at", "app_count")
-    )
-
-    matched = (
-        device_apps.join(kept.select("os", "uuid"), ["os", "uuid"], "left_semi")
-        .join(F.broadcast(iapp), "bundle", "inner")
-        .groupBy("os", "uuid")
-        .agg(
-            F.count(F.lit(1)).alias("intersect_app"),
-            F.sum("num_purchasers").alias("intersect_purchaser"),
-            F.sum("total_amount").alias("intersect_amount"),
-        )
-    )
-    totals = iapp.agg(
-        F.count(F.lit(1)).alias("iapp_size"),
-        F.coalesce(F.sum("num_purchasers"), F.lit(0)).alias("total_purchasers"),
-        F.coalesce(F.sum("total_amount"), F.lit(0)).alias("total_amount_sum"),
-    )
-    out = (
-        kept.join(matched, ["os", "uuid"], "left")
-        .fillna(0, ["intersect_app", "intersect_purchaser", "intersect_amount"])
-        .crossJoin(F.broadcast(totals))
-    )
-    return out.select(
-        "os",
-        "uuid",
-        "first_at",
-        "app_count",
-        "intersect_app",
-        "intersect_purchaser",
-        "intersect_amount",
-        (F.col("intersect_app") / (F.lit(1) + F.col("iapp_size"))).alias("f486"),
-        (F.col("intersect_purchaser") / (F.lit(1) + F.col("total_purchasers"))).alias("f586"),
-        (F.col("intersect_app") / (F.lit(1) + F.col("app_count"))).alias("f686"),
-        (F.col("intersect_amount") / (F.lit(1) + F.col("total_amount_sum"))).alias("f777"),
-    )
-
-
-def feature_inputs_from_valid(
-    valid_logs: DataFrame,
+def feature_inputs(
+    profiles: DataFrame,
     suspicious: DataFrame,
     iapp: DataFrame,
 ) -> DataFrame:
-    """Scale-optimized formulation of feature_inputs straight from the flat
-    validated rows (same output, oracle-checked): per-device first_at and
-    app_count come from one codegen hash agg, the IAPP intersection from
-    the distinct device-app pairs — no nested arrays anywhere."""
-    dev = (
-        valid_logs.groupBy("os", "uuid")
-        .agg(
-            F.min("received_at").alias("first_at"),
-            F.countDistinct("app_bundle").cast("int").alias("app_count"),
-        )
-        .join(suspicious.select("os", "uuid"), ["os", "uuid"], "left_anti")
-        .filter(F.substring(F.col("uuid"), 8, 1) == "0")
+    """Feature inputs from nested DeviceProfiles and a suspicious
+    blacklist (os, uuid); output as `_assemble`."""
+    kept = profiles.join(
+        suspicious.select("os", "uuid"), ["os", "uuid"], "left_anti"
+    ).filter(_in_sample())
+    stats, apps = profile_relations(kept)
+    return _assemble(stats, apps, iapp)
+
+
+def feature_pipeline_from_valid(
+    valid_logs: DataFrame,
+    iapp: DataFrame,
+    thresholds: SuspiciousThresholds = SuspiciousThresholds(),
+) -> DataFrame:
+    """Suspicious detection AND feature assembly straight from the flat
+    validated rows, off one shared (stats, apps) pair: identical output to
+    feature_inputs(p, suspicious_ids(p, app_profiles(p), t), iapp) with
+    p = device_profiles(valid_logs) — oracle- and test-checked."""
+    stats, apps = valid_relations(valid_logs)
+    kept = score_devices(stats, apps, app_user_counts(apps), thresholds).filter(
+        ~F.col("suspicious") & _in_sample()
     )
-    device_apps = (
-        valid_logs.select("os", "uuid", F.col("app_bundle").alias("bundle"))
-        .distinct()
-        .join(dev.select("os", "uuid"), ["os", "uuid"], "left_semi")
-    )
-    matched = (
-        device_apps.join(F.broadcast(iapp), "bundle", "inner")
-        .groupBy("os", "uuid")
-        .agg(
-            F.count(F.lit(1)).alias("intersect_app"),
-            F.sum("num_purchasers").alias("intersect_purchaser"),
-            F.sum("total_amount").alias("intersect_amount"),
-        )
-    )
-    totals = iapp.agg(
-        F.count(F.lit(1)).alias("iapp_size"),
-        F.coalesce(F.sum("num_purchasers"), F.lit(0)).alias("total_purchasers"),
-        F.coalesce(F.sum("total_amount"), F.lit(0)).alias("total_amount_sum"),
-    )
-    out = (
-        dev.join(matched, ["os", "uuid"], "left")
-        .fillna(0, ["intersect_app", "intersect_purchaser", "intersect_amount"])
-        .crossJoin(F.broadcast(totals))
-    )
-    return out.select(
-        "os",
-        "uuid",
-        "first_at",
-        "app_count",
-        "intersect_app",
-        "intersect_purchaser",
-        "intersect_amount",
-        (F.col("intersect_app") / (F.lit(1) + F.col("iapp_size"))).alias("f486"),
-        (F.col("intersect_purchaser") / (F.lit(1) + F.col("total_purchasers"))).alias("f586"),
-        (F.col("intersect_app") / (F.lit(1) + F.col("app_count"))).alias("f686"),
-        (F.col("intersect_amount") / (F.lit(1) + F.col("total_amount_sum"))).alias("f777"),
-    )
+    kept_apps = apps.join(kept.select("os", "uuid"), ["os", "uuid"], "left_semi")
+    return _assemble(kept, kept_apps, iapp)

@@ -10,10 +10,13 @@ id is emitted at most once — here a single boolean disjunction per row):
   (c) its total bid count across all apps/exchanges exceeds
       BID_LOG_COUNT_THRESHOLD
 
-The popular-apps side input (Beam View.asList) becomes a plain left-anti
-join that Catalyst broadcasts from its size estimate — the dimension is
-small (distinct bundles), so no shuffle of the device side; at 100 TB the
-detail side streams through map-side-only stages.
+The rules are written once, in `score_devices`, over the (stats, apps)
+relations of operators/device_profile.py; the nested and flat entry points
+differ only in which producer they call. The popular-apps side input (Beam
+View.asList) becomes a plain left-anti join that Catalyst broadcasts from
+its size estimate — the dimension is small (distinct bundles), so no
+shuffle of the device side; at 100 TB the detail side streams through
+map-side-only stages.
 """
 
 from __future__ import annotations
@@ -22,6 +25,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .device_profile import profile_relations, valid_relations
 
 
 @dataclass(frozen=True)
@@ -32,6 +37,38 @@ class SuspiciousThresholds:
     app_count: int = 3  # max unpopular apps
     geo_count: int = 8  # max distinct geos
     bid_log_count: int = 10  # max total bids
+
+
+def score_devices(
+    stats: DataFrame,
+    apps: DataFrame,
+    user_counts: DataFrame,
+    t: SuspiciousThresholds,
+) -> DataFrame:
+    """`stats` plus a `suspicious` boolean column. `user_counts` holds
+    (bundle, user_count) — the AppProfiles side input."""
+    popular = user_counts.filter(F.col("user_count") > t.user_count).select("bundle")
+    unpopular_counts = (
+        apps.join(popular, "bundle", "left_anti")
+        .groupBy("os", "uuid")
+        .agg(F.count(F.lit(1)).alias("unpopular_apps"))
+    )
+    return (
+        stats.join(unpopular_counts, ["os", "uuid"], "left")
+        .withColumn("unpopular_apps", F.coalesce(F.col("unpopular_apps"), F.lit(0)))
+        .withColumn(
+            "suspicious",
+            (F.col("geo_cnt") > t.geo_count)
+            | (F.col("unpopular_apps") > t.app_count)
+            | (F.col("total_bids") > t.bid_log_count),
+        )
+    )
+
+
+def app_user_counts(apps: DataFrame) -> DataFrame:
+    """(bundle, user_count) from a device-app relation — AppProfiles'
+    user-count leg without the nested detour."""
+    return apps.groupBy("bundle").agg(F.countDistinct("os", "uuid").alias("user_count"))
 
 
 def suspicious_ids(
@@ -45,98 +82,18 @@ def suspicious_ids(
     AppProfile frame (J4: the aggregate side is broadcast back onto the
     per-device side, mirroring the reference's side-input pattern).
     """
-    t = thresholds
-    popular = app_profiles.filter(F.col("user_count") > t.user_count).select("bundle")
-
-    device_apps = profiles.select(
-        "os", "uuid", F.explode(F.col("apps.bundle")).alias("bundle")
-    )
-    unpopular_counts = (
-        device_apps.join(popular, "bundle", "left_anti")
-        .groupBy("os", "uuid")
-        .agg(F.count(F.lit(1)).alias("unpopular_apps"))
-    )
-
-    base = profiles.select(
-        "os",
-        "uuid",
-        F.size("geos").alias("geo_cnt"),
-        F.expr(
-            "aggregate(apps, 0L, (acc, a) -> acc +"
-            " aggregate(map_values(a.count_per_exchange), 0L, (x, y) -> x + y))"
-        ).alias("total_bids"),
-    )
-
-    scored = base.join(unpopular_counts, ["os", "uuid"], "left").withColumn(
-        "unpopular_apps", F.coalesce(F.col("unpopular_apps"), F.lit(0))
-    )
-
-    return scored.filter(
-        (F.col("geo_cnt") > t.geo_count)
-        | (F.col("unpopular_apps") > t.app_count)
-        | (F.col("total_bids") > t.bid_log_count)
-    ).select("os", "uuid")
+    stats, apps = profile_relations(profiles)
+    scored = score_devices(stats, apps, app_profiles, thresholds)
+    return scored.filter("suspicious").select("os", "uuid")
 
 
 def suspicious_ids_from_valid(
     valid_logs: DataFrame,
     thresholds: SuspiciousThresholds = SuspiciousThresholds(),
 ) -> DataFrame:
-    """Scale-optimized formulation straight from the flat validated rows —
-    identical output to suspicious_ids(device_profiles(v), app_profiles(...))
-    (oracle- and test-checked) with zero nested-array construction: every
-    stage is a codegen hash agg or broadcast join on the one scan. geo
-    count is countDistinct(country, region); total bids is the row count
-    (each valid row contributes exactly one count_per_exchange increment)."""
-    t = thresholds
-    from ..functions._cache import hold
-
-    # ONE scan: the level-1 agg does the big cardinality reduction (bid-log
-    # rows -> device-app) while carrying the row count and geo set partials;
-    # it is persisted and every downstream relation derives from it. geo
-    # fields are never null in validated logs (blanks are ''/' '), so
-    # set-union size == countDistinct(country, region).
-    # level-0: pure codegen reduce (geo columns in the grouping key) so the
-    # object-agg collect_set only touches the already-reduced relation
-    level0 = valid_logs.groupBy(
-        "os", "uuid", F.col("app_bundle").alias("bundle"),
-        "geo_country", "geo_region",
-    ).agg(F.count(F.lit(1)).alias("n"))
-    level1 = hold(
-        level0.groupBy("os", "uuid", "bundle").agg(
-            F.sum("n").alias("n"),
-            F.collect_set(F.struct("geo_country", "geo_region")).alias("geos"),
-        ),
-        # lazy hold (r13): the first consumer's action fills the cache;
-        # concurrent fills are serialized per partition by the block
-        # manager, so an upfront count is pure added latency (see hold())
-    )
-
-    popular = (
-        level1.groupBy("bundle")
-        .agg(F.count(F.lit(1)).alias("user_count"))
-        .filter(F.col("user_count") > t.user_count)
-        .select("bundle")
-    )
-    # J1: a plain anti join. Catalyst broadcasts the popular set from its
-    # size estimate and AQE re-plans from runtime stats; the scale fallback
-    # for a popular set too big to broadcast is SURVEY.md §4.
-    unpopular_counts = (
-        level1.join(popular, "bundle", "left_anti")
-        .groupBy("os", "uuid")
-        .agg(F.count(F.lit(1)).alias("unpopular_apps"))
-    )
-    dev_stats = level1.groupBy("os", "uuid").agg(
-        F.size(F.array_distinct(F.flatten(F.collect_list("geos")))).cast(
-            "long"
-        ).alias("geo_cnt"),
-        F.sum("n").alias("total_bids"),
-    )
-    scored = dev_stats.join(unpopular_counts, ["os", "uuid"], "left").withColumn(
-        "unpopular_apps", F.coalesce(F.col("unpopular_apps"), F.lit(0))
-    )
-    return scored.filter(
-        (F.col("geo_cnt") > t.geo_count)
-        | (F.col("unpopular_apps") > t.app_count)
-        | (F.col("total_bids") > t.bid_log_count)
-    ).select("os", "uuid")
+    """suspicious_ids straight from the flat validated rows — identical
+    output to suspicious_ids(device_profiles(v), app_profiles(...)) (oracle-
+    and test-checked) with no nested arrays."""
+    stats, apps = valid_relations(valid_logs)
+    scored = score_devices(stats, apps, app_user_counts(apps), thresholds)
+    return scored.filter("suspicious").select("os", "uuid")

@@ -21,7 +21,11 @@ from pyspark.sql import functions as F
 from ..sources.bidlogs import load_bid_logs, load_iapp
 from ..sources.tables import register_tables
 from ..operators.validate import valid_bid_logs
-from ..operators.device_profile import device_profiles, flatten_device_profiles
+from ..operators.device_profile import (
+    device_profiles,
+    flatten_device_profiles,
+    profile_relations,
+)
 from ..operators.app_profile import (
     app_profile_slots_from_valid,
     app_profiles,
@@ -84,18 +88,15 @@ def q_device_profiles_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_device_profile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 rollup: per-device bounds + app/geo/bid cardinalities."""
-    p = _profiles(spark, sf_dir)
-    return p.select(
+    stats, _ = profile_relations(_profiles(spark, sf_dir))
+    return stats.select(
         "os",
         "uuid",
         "first_at",
         "last_at",
-        F.size("apps").alias("app_count"),
-        F.size("geos").alias("geo_count"),
-        F.expr(
-            "aggregate(apps, 0L, (acc, a) -> acc +"
-            " aggregate(map_values(a.count_per_exchange), 0L, (x, y) -> x + y))"
-        ).alias("total_bids"),
+        "app_count",
+        F.col("geo_cnt").alias("geo_count"),
+        "total_bids",
     )
 
 

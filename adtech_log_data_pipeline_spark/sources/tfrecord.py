@@ -31,7 +31,6 @@ sink would be `df.foreachPartition` writing one shard per partition, which
 
 from __future__ import annotations
 
-import glob as _glob
 import gzip as _gzip
 import io
 import os
@@ -380,8 +379,3 @@ def read_tfrecord_proto(
             yield pd.DataFrame(rows, columns=names)
 
     return records.mapInPandas(decode, schema=schema)
-
-
-def local_tfrecord_paths(path_glob: str) -> list[str]:
-    """Expand a local glob (fixture helper)."""
-    return sorted(_glob.glob(path_glob))

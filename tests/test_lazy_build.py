@@ -8,13 +8,10 @@ from adtech_log_data_pipeline_spark.operators import (
     app_profiles,
     device_profiles,
     feature_inputs,
-    feature_inputs_from_valid,
+    feature_pipeline_from_valid,
     suspicious_ids,
     suspicious_ids_from_valid,
     valid_bid_logs,
-)
-from adtech_log_data_pipeline_spark.operators.features import (
-    feature_pipeline_from_valid,
 )
 from tests.conftest import bid_log, bid_logs_df
 
@@ -46,7 +43,6 @@ def test_building_lookup_operators_fires_no_spark_job(spark):
     before = _job_ids(spark)
     susp = suspicious_ids(profiles, aps, t)
     feature_inputs(profiles, susp, iapp)
-    flat_susp = suspicious_ids_from_valid(v, t)
-    feature_inputs_from_valid(v, flat_susp, iapp)
+    suspicious_ids_from_valid(v, t)
     feature_pipeline_from_valid(v, iapp, t)
     assert _job_ids(spark) == before

@@ -147,7 +147,7 @@ def _zipf_valid_bid_logs(spark, n=120_000, n_bundles=1_000, n_devices=30_000):
     rows: the A5 bundle-skew fixture SURVEY.md §4 names. The head rank
     carries 35% of all raw rows (a bot-scale hot app); the tail follows
     the log-uniform inverse-CDF (P(rank k) ~ ln((k+1)/k)/ln(N)). The head
-    must be this hot because the level-1 aggregation dedups to distinct
+    must be this hot because the device-app relation dedups to distinct
     (device, bundle) pairs before the join — a mild zipf head gets
     diluted below AQE's skew factor by exactly that dedup (which is the
     engine's first line of defense; see the test docstring)."""
@@ -178,7 +178,8 @@ def _zipf_valid_bid_logs(spark, n=120_000, n_bundles=1_000, n_devices=30_000):
 
 def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
     """The REAL A5 skew surface: the J1 popularity lookup in
-    suspicious_ids_from_valid is a plain bundle-keyed LEFT ANTI join.
+    operators/suspicious.py::score_devices is a plain bundle-keyed LEFT
+    ANTI join.
     Catalyst broadcasts the popular set on every fixture (skew-immune),
     but at web scale a popular set beyond broadcast capacity plans as a
     shuffle join keyed by bundle, and a zipf-hot bundle then skews one
@@ -200,7 +201,7 @@ def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
     AQE splits AFTER the map stage wrote the skewed shuffle files
     (reducer-side fix only) and inside one join only; a deliberate salt
     spreads the hot key at map time and composes across stages. The
-    engine's first defense remains that the level-1 aggregation key
+    engine's first defense remains that the device-app relation's key
     (os, uuid, bundle) is high-cardinality and hash-uniform even under
     bundle zipf — only the bundle-keyed JOIN ever skews, and only when
     the lookup side cannot broadcast."""
@@ -209,9 +210,10 @@ def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
     from adtech_log_data_pipeline_spark.operators.validate import valid_bid_logs
 
     v = valid_bid_logs(_zipf_valid_bid_logs(spark, n=400_000, n_devices=100_000))
-    # suspicious_ids_from_valid's level-0/level-1 reduction,
-    # sans hold(): device-app relation with one row per (os, uuid, bundle)
-    level1 = (
+    # the device-app relation the flat path feeds the popularity anti
+    # join (device_profile.py::valid_relations, sans hold()): one row per
+    # (os, uuid, bundle)
+    device_apps = (
         v.groupBy("os", "uuid", F.col("app_bundle").alias("bundle"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -220,7 +222,7 @@ def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
     # bundle-hash partition — the shuffle sizes AQE sees. Observed at this
     # fixture: hot partition ~105k rows vs ~7k median (15x, >> factor 2).
     parts = (
-        level1.groupBy(F.pmod(F.hash("bundle"), F.lit(32)).alias("p"))
+        device_apps.groupBy(F.pmod(F.hash("bundle"), F.lit(32)).alias("p"))
         .count()
         .collect()
     )
@@ -249,20 +251,20 @@ def test_aqe_splits_hot_bundle_in_popularity_anti_join(spark):
     try:
         # the precomputed popular set, as read back from storage
         popular = (
-            level1.groupBy("bundle")
+            device_apps.groupBy("bundle")
             .agg(F.count(F.lit(1)).alias("user_count"))
             .filter(F.col("user_count") > 300)
             .select("bundle", F.lit(1).alias("is_pop"))
             .localCheckpoint()
         )
-        shuffled = level1.join(popular, "bundle", "left_outer").filter(
+        shuffled = device_apps.join(popular, "bundle", "left_outer").filter(
             F.col("is_pop").isNull()
         )
         n_shuffled = len(shuffled.collect())  # same QueryExecution as the plan
         plan = shuffled._jdf.queryExecution().executedPlan().toString()
         assert "skewed" in plan, plan[:2000]
         # row-identical to the engine's broadcast anti-join formulation
-        n_broadcast = level1.join(
+        n_broadcast = device_apps.join(
             F.broadcast(popular.select("bundle")), "bundle", "left_anti"
         ).count()
         assert n_shuffled == n_broadcast > 0

@@ -152,55 +152,16 @@ def test_tfrecord_frame_roundtrip_law(payloads):
     assert list(iter_tfrecords(io.BytesIO(buf))) == payloads
 
 
-def test_python_datasource_matches_mapinpandas_route(spark, tmp_path):
-    """format("tfrecord_py") (the PySpark 4 Python DataSource surface)
-    must return exactly what sources/tfrecord.py::read_tfrecord returns:
-    same payload multiset, same per-file attribution, one partition per
-    file."""
-    from adtech_log_data_pipeline_spark.sources.pyds import (
-        register_python_datasources,
-    )
-
-    payloads = [f"rec-{i}".encode() * (i % 5 + 1) for i in range(57)]
-    write_tfrecord(str(tmp_path / "p-0.tfrecord.gz"), payloads[:30])
-    write_tfrecord(str(tmp_path / "p-1.tfrecord"), payloads[30:])
-    register_python_datasources(spark)
-    glob = str(tmp_path / "p-*.tfrecord*")
-    via_ds = spark.read.format("tfrecord_py").load(glob)
-    assert via_ds.rdd.getNumPartitions() == 2
-    got = sorted(
-        (r["path"].split("/")[-1], bytes(r["payload"]))
-        for r in via_ds.collect()
-    )
-    ref = sorted(
-        (r["path"].split("/")[-1], bytes(r["payload"]))
-        for r in read_tfrecord(spark, glob).collect()
-    )
-    assert got == ref and len(got) == 57
-
-
 def test_python_datasource_crc_verify_and_lenient(spark, tmp_path):
-    """Corrupt payload bytes: the default verify_crc fails the scan; the
-    lenient option yields the (corrupt) payload — the same contract as
-    the mapInPandas route."""
-    import pytest
-    from adtech_log_data_pipeline_spark.sources.pyds import (
-        register_python_datasources,
-    )
-
-    write_tfrecord(str(tmp_path / "c.tfrecord"), [b"payload-one"])
+    """Corrupt payload bytes through read_tfrecord, the default reader: the
+    default verify_crc fails the scan; verify_crc=False yields the
+    (corrupt) payload."""
+    path = str(tmp_path / "c.tfrecord")
+    write_tfrecord(path, [b"payload-one"])
     raw = bytearray((tmp_path / "c.tfrecord").read_bytes())
     raw[14] ^= 0xFF  # flip a payload byte, leave both CRCs stale
     (tmp_path / "c.tfrecord").write_bytes(bytes(raw))
-    register_python_datasources(spark)
     with pytest.raises(Exception, match="CRC|crc"):
-        spark.read.format("tfrecord_py").load(
-            str(tmp_path / "c.tfrecord")
-        ).collect()
-    lenient = (
-        spark.read.format("tfrecord_py")
-        .option("verify_crc", "false")
-        .load(str(tmp_path / "c.tfrecord"))
-        .collect()
-    )
+        read_tfrecord(spark, path).collect()
+    lenient = read_tfrecord(spark, path, verify_crc=False).collect()
     assert len(lenient) == 1 and bytes(lenient[0]["payload"]) != b"payload-one"
